@@ -803,6 +803,7 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
     count/latency, and the state size (distinct window×type groups)."""
     from pyspark.sql import functions as F
 
+    from etl_mudah_spark.streaming.pipeline import run_available
     from etl_mudah_spark.tables import load
 
     scratch = tempfile.mkdtemp(prefix="bench_stream_")
@@ -812,89 +813,19 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
         n_rows = events.count()
         events.repartition(n_files).write.mode("overwrite").parquet(drop)
         schema = spark.read.parquet(drop).schema
-        batches: list[int] = []
 
-        def sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            batches.append(batch_id)
+        def hourly_rollup(files_per_trigger: int, state_partitions=None):
+            """One run of the rollup over the drop files; returns
+            ``(wall_sec, micro_batches)``."""
+            batches: list[int] = []
 
-        agg = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(drop)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-        )
-        t0 = time.perf_counter()
-        q = agg.writeStream.outputMode("update").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        wall = time.perf_counter() - t0
+            def sink(batch_df, batch_id: int) -> None:
+                batch_df.write.mode("overwrite").format("noop").save()
+                batches.append(batch_id)
 
-        # Saturation point: the same pipeline fed everything in ONE
-        # trigger — separates the per-micro-batch floor (scheduling +
-        # state-store round trip, what the 1-file/trigger number is
-        # made of) from actual streaming compute throughput.
-        sat_batches: list[int] = []
-
-        def sat_sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            sat_batches.append(batch_id)
-
-        sat_agg = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(n_files))
-            .parquet(drop)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-        )
-        t1 = time.perf_counter()
-        q2 = (
-            sat_agg.writeStream.outputMode("update")
-            .foreachBatch(sat_sink)
-            .start()
-        )
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        sat_wall = time.perf_counter() - t1
-
-        # State-sized partitioning (round-11 floor decomposition,
-        # BASELINE.md §13): the per-trigger floor is dominated by
-        # addBatch, which is dominated by ONE state-store commit file
-        # per state partition per trigger — 32 partitions for a
-        # ~800-group state is pure ledger overhead (measured: 0.74 ->
-        # 0.52 s/batch at 4 partitions, 0.36 at 1). Production sizing
-        # rule: state partitions ~ state size / executor memory, NOT
-        # the batch shuffle width. Reported as separate keys so the
-        # original 32-partition series stays comparable.
-        p4_batches: list[int] = []
-
-        def p4_sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            p4_batches.append(batch_id)
-
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            p4_agg = (
+            agg = (
                 spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
+                .option("maxFilesPerTrigger", str(files_per_trigger))
                 .parquet(drop)
                 .withWatermark("ts", "10 minutes")
                 .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -905,19 +836,30 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
                     .alias("total_value"),
                 )
             )
-            t2 = time.perf_counter()
-            q3 = (
-                p4_agg.writeStream.outputMode("update")
-                .foreachBatch(p4_sink)
-                .start()
+            t0 = time.perf_counter()
+            run_available(
+                spark,
+                agg.writeStream.outputMode("update").foreachBatch(sink),
+                state_partitions=state_partitions,
             )
-            try:
-                q3.processAllAvailable()
-            finally:
-                q3.stop()
-            p4_wall = time.perf_counter() - t2
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            return time.perf_counter() - t0, len(batches)
+
+        wall, n_batches = hourly_rollup(1)
+        # Saturation point: the same pipeline fed everything in ONE
+        # trigger — separates the per-micro-batch floor (scheduling +
+        # state-store round trip, what the 1-file/trigger number is
+        # made of) from actual streaming compute throughput.
+        sat_wall, _ = hourly_rollup(n_files)
+        # State-sized partitioning (round-11 floor decomposition,
+        # BASELINE.md §13): the per-trigger floor is dominated by
+        # addBatch, which is dominated by ONE state-store commit file
+        # per state partition per trigger — 32 partitions for a
+        # ~800-group state is pure ledger overhead (measured: 0.74 ->
+        # 0.52 s/batch at 4 partitions, 0.36 at 1). Production sizing
+        # rule: state partitions ~ state size / executor memory, NOT
+        # the batch shuffle width. Reported as separate keys so the
+        # original 32-partition series stays comparable.
+        p4_wall, p4_batches = hourly_rollup(1, state_partitions=4)
 
         state_rows = (
             events.select(
@@ -931,10 +873,10 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
             "streaming_rows_per_sec_saturated": round(n_rows / sat_wall),
             "streaming_rows_per_sec_state_sized": round(n_rows / p4_wall),
             "streaming_input_rows": n_rows,
-            "streaming_batches": len(batches),
-            "streaming_batch_latency_sec": round(wall / max(1, len(batches)), 3),
+            "streaming_batches": n_batches,
+            "streaming_batch_latency_sec": round(wall / max(1, n_batches), 3),
             "streaming_batch_latency_state_sized": round(
-                p4_wall / max(1, len(p4_batches)), 3
+                p4_wall / max(1, p4_batches), 3
             ),
             "streaming_state_groups": state_rows,
         }

@@ -94,11 +94,6 @@ def dsum2(col: Column | str) -> Column:
     return F.sum(c.cast(_DEC_COMPACT)).cast("double")
 
 
-def oracle_dsum2(expr: str) -> str:
-    """The DuckDB twin of :func:`dsum2` (same compact lattice)."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(8,2))) AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------------
 # Scalar operators
 # ---------------------------------------------------------------------------

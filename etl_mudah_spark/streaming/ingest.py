@@ -22,12 +22,46 @@ partitions (merge_upsert prunes via partition_col), not table size.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mudah_spark.operators.flatten import flatten_listings
 from etl_mudah_spark.operators.merge import merge_upsert
 from etl_mudah_spark.schemas import API_LISTING
+from etl_mudah_spark.streaming.pipeline import read_staged, run_available
+
+
+def _upsert_listings(
+    spark: SparkSession,
+    flat: DataFrame,
+    table_path: str,
+    partition_col: str | None,
+    batch_ts,
+) -> None:
+    """Merge one flattened micro-batch into the listings table, newest
+    row per listing_id wins.
+
+    The stamp is derived from the batch's own data (max listing_date),
+    not a single stream-start timestamp: each micro-batch gets its own
+    updated_at, and a replayed batch reproduces the same stamp
+    (idempotent under the at-least-once edge). An explicit ``batch_ts``
+    overrides."""
+    if flat.isEmpty():
+        return
+    ts = batch_ts
+    if ts is None:
+        ts = flat.agg(F.max("listing_date")).first()[0]
+    merge_upsert(
+        spark,
+        flat,
+        table_path,
+        key_cols=["listing_id"],
+        order_cols=["listing_date", "listing_id"],
+        partition_col=partition_col,
+        batch_ts=ts,
+    )
 
 
 def stream_ingest_listings(
@@ -44,12 +78,11 @@ def stream_ingest_listings(
     state_partitions: int | None = None,
 ) -> None:
     """Run the drop-zone → merged-table pipeline to completion
-    (Trigger.AvailableNow semantics via processAllAvailable).
+    (Trigger.AvailableNow semantics via pipeline.run_available).
 
-    ``state_partitions`` sizes spark.sql.shuffle.partitions — the
-    state/merge-shuffle width fixed AT QUERY START — to state volume
-    (streaming/pipeline.py state_partitions_for, BASELINE.md §13)
-    instead of leaving the session default.
+    ``state_partitions`` sizes the state/merge-shuffle width fixed AT
+    QUERY START to state volume (streaming/pipeline.py
+    state_partitions_for, BASELINE.md §13) instead of the core count.
 
     ``drop_dir`` holds JSON-lines files of raw API listings (the
     ``data[]`` elements: ``{"id": ..., "attributes": {...}}``).
@@ -69,12 +102,6 @@ def stream_ingest_listings(
         raise ValueError(
             "row_checks and quarantine_path must be passed together"
         )
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         flat = flatten_listings(batch)
@@ -86,40 +113,20 @@ def stream_ingest_listings(
                 rejects.withColumn(
                     "violated", F.concat_ws(",", F.col("violated"))
                 ).write.mode("append").parquet(quarantine_path)
-        if not flat.isEmpty():
-            # Per-batch stamp derived from the batch's own data (max
-            # listing_date), not a single stream-start timestamp: each
-            # micro-batch gets its own updated_at, and a replayed batch
-            # reproduces the same stamp (idempotent under the
-            # at-least-once edge). An explicit batch_ts overrides.
-            ts = batch_ts
-            if ts is None:
-                ts = flat.agg(F.max("listing_date")).first()[0]
-            merge_upsert(
-                spark,
-                flat,
-                table_path,
-                key_cols=["listing_id"],
-                order_cols=["listing_date", "listing_id"],
-                partition_col=partition_col,
-                batch_ts=ts,
-            )
+        _upsert_listings(spark, flat, table_path, partition_col, batch_ts)
 
     stream = (
         spark.readStream.schema(API_LISTING)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(drop_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        state_partitions=state_partitions,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_ingest_listings_live(
@@ -145,7 +152,7 @@ def stream_ingest_listings_live(
     its table (dags/dag.py:284-342, 243-266), this reads each item
     once and converges to the same table.
 
-    Runs to completion (processAllAvailable) like its drop-zone twin —
+    Runs to completion (pipeline.run_available) like its drop-zone twin —
     schedule it per-interval, or replace the trigger for a resident
     stream.
     """
@@ -154,33 +161,19 @@ def stream_ingest_listings_live(
     spark.dataSource.register(ListingsDataSource)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        flat = flatten_listings(batch)
-        if not flat.isEmpty():
-            ts = batch_ts
-            if ts is None:
-                ts = flat.agg(F.max("listing_date")).first()[0]
-            merge_upsert(
-                spark,
-                flat,
-                table_path,
-                key_cols=["listing_id"],
-                order_cols=["listing_date", "listing_id"],
-                partition_col=partition_col,
-                batch_ts=ts,
-            )
+        _upsert_listings(
+            spark, flatten_listings(batch), table_path, partition_col, batch_ts
+        )
 
     stream = (
         spark.readStream.format("mudah_listings").options(**source_options).load()
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_scd2_ingest(
@@ -203,10 +196,9 @@ def stream_scd2_ingest(
     snapshots (CDC feed / periodic dimension dumps in ``drop_dir`` as
     JSON-lines matching ``schema_ddl``).
 
-    ``state_partitions`` sizes spark.sql.shuffle.partitions — the
-    state/merge-shuffle width fixed AT QUERY START — to state volume
-    (streaming/pipeline.py state_partitions_for, BASELINE.md §13)
-    instead of leaving the session default.
+    ``state_partitions`` sizes the state/merge-shuffle width fixed AT
+    QUERY START to state volume (streaming/pipeline.py
+    state_partitions_for, BASELINE.md §13) instead of the core count.
 
     Per micro-batch, foreachBatch does the incremental-history dance:
 
@@ -248,19 +240,12 @@ def stream_scd2_ingest(
     step 3 a dynamic partition overwrite of the touched buckets, as
     operators/merge.py does for facts.
     """
-    import os
     import shutil
 
     from etl_mudah_spark.operators.scd import scd2_collapse
 
     if swap not in ("rename", "manifest"):
         raise ValueError(f"swap must be 'rename' or 'manifest', got {swap!r}")
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
     staging = history_path.rstrip("/") + "._staging"
     aside = history_path.rstrip("/") + "._old"
@@ -402,16 +387,13 @@ def stream_scd2_ingest(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(drop_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        state_partitions=state_partitions,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_ivm_refresh(
@@ -454,8 +436,6 @@ def stream_ivm_refresh(
     raises if no live version exists rather than guessing a zero
     state.
     """
-    import os
-
     from etl_mudah_spark.operators.ivm import incremental_agg
     from etl_mudah_spark.operators.manifest import (
         manifest_current,
@@ -467,12 +447,6 @@ def stream_ivm_refresh(
             f"stream_ivm_refresh: no live aggregate version at {agg_base!r} "
             "— bootstrap with manifest_publish(summing_agg(snapshot)) first"
         )
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
     _MARKER = "_applied_batch"
 
@@ -502,16 +476,13 @@ def stream_ivm_refresh(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(diff_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        state_partitions=state_partitions,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_srp_dedup_ingest(
@@ -595,22 +566,15 @@ def stream_srp_dedup_ingest(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    if not os.path.exists(pairs_path):
-        return spark.createDataFrame(
-            [], "id_a bigint, id_b bigint, cosine_sim double"
-        )
-    return spark.read.parquet(pairs_path)
+    return read_staged(
+        spark, pairs_path, "id_a bigint, id_b bigint, cosine_sim double"
+    )
 
 
 def stream_minhash_dedup_ingest(
@@ -673,22 +637,15 @@ def stream_minhash_dedup_ingest(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    if not os.path.exists(pairs_path):
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, jaccard double"
-        )
-    return spark.read.parquet(pairs_path)
+    return read_staged(
+        spark, pairs_path, "doc_a bigint, doc_b bigint, jaccard double"
+    )
 
 
 def stream_doc_curation_gate(
@@ -812,29 +769,19 @@ def stream_doc_curation_gate(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_available(
+        spark,
+        stream.writeStream.foreachBatch(apply_batch).option(
+            "checkpointLocation", checkpoint_dir
+        ),
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    acc = (
-        spark.read.parquet(accepted_path)
-        if os.path.exists(accepted_path)
-        else spark.createDataFrame(
-            [], "doc_id bigint, source string, n_tok bigint"
-        )
+    return (
+        read_staged(
+            spark, accepted_path, "doc_id bigint, source string, n_tok bigint"
+        ),
+        read_staged(
+            spark,
+            rejected_path,
+            "doc_id bigint, source string, n_tok bigint, reason string",
+        ),
     )
-    rej = (
-        spark.read.parquet(rejected_path)
-        if os.path.exists(rejected_path)
-        else spark.createDataFrame(
-            [], "doc_id bigint, source string, n_tok bigint, reason string"
-        )
-    )
-    return acc, rej

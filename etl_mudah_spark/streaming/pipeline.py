@@ -5,12 +5,18 @@ re-scrape with idempotent upsert — here expressed as real streams:
 
 - ``stream_hourly_event_counts``: file-source stream → watermarked
   tumbling-window aggregation → foreachBatch parquet staging (complete
-  mode), driven to completion synchronously with
-  ``processAllAvailable``; the returned DataFrame is a lazy read of the
-  staged files (never a driver-side collect), comparable against a
-  batch/DuckDB oracle.
+  mode, :func:`drain_to_parquet`); the returned DataFrame is a lazy
+  read of the staged files (never a driver-side collect), comparable
+  against a batch/DuckDB oracle.
 - ``stream_dedup_events``: watermark + dropDuplicatesWithinWatermark —
   the streaming twin of SURVEY §2 D1.
+
+Every bounded stream in the engine — these builders, the sessionizers
+in stateful.py and the foreachBatch ingest loops in ingest.py — runs
+through one runner, :func:`run_available`: it sets the state width
+just before the query starts, drives the query until the available
+input is processed, and restores the session's width on every exit
+path.
 
 At production scale the same plans run against Kafka with a real
 trigger; the file source here is the test harness (same logical plan,
@@ -20,13 +26,14 @@ different source — that is the point of Structured Streaming).
 from __future__ import annotations
 
 import atexit
-import functools
 import glob
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 from pyspark.sql import functions as F
 
 EVENTS_SCHEMA_TEMPLATE = (
@@ -34,58 +41,9 @@ EVENTS_SCHEMA_TEMPLATE = (
     "value double, props string"
 )
 
-# Final StreamingQueryProgress of the last drain_to_parquet run —
+# Final StreamingQueryProgress of the last run_available run —
 # diagnostics/test surface (state partition counts, batch durations).
 LAST_PROGRESS: dict = {}
-
-# Single-slot save of the session's spark.sql.shuffle.partitions from
-# before a streaming builder resized it (events_raw_schema saves,
-# drain_to_parquet / the builder's own drain restores). Streaming state
-# width is fixed AT QUERY START, so the conf must stay resized until
-# .start() — a plain context manager around the set alone would restore
-# too early; this slot spans the build→start→drain window instead.
-# Without the restore, a stream sized to dashboard state (e.g.
-# state_partitions=1) would leave every LATER batch shuffle in the
-# session planned 1-wide: AQE only coalesces partitions DOWN, never up
-# (ADVICE r12).
-_PRIOR_SHUFFLE: list[str] = []
-
-
-def _save_and_set_shuffle_width(spark: SparkSession, n: int) -> None:
-    """Set the streaming state width, saving the session default once
-    per build→drain span (re-entrant: a builder reading two streams
-    saves only the true prior)."""
-    if not _PRIOR_SHUFFLE:
-        _PRIOR_SHUFFLE.append(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-
-
-def restore_shuffle_width(spark: SparkSession) -> None:
-    """Restore the pre-stream session shuffle width (no-op if nothing
-    is pending). Every drain path must call this in a finally."""
-    if _PRIOR_SHUFFLE:
-        spark.conf.set("spark.sql.shuffle.partitions", _PRIOR_SHUFFLE.pop())
-
-
-def _restores_shuffle_width(fn):
-    """Builder-level leak guard (ADVICE r13): every public builder saves
-    the session shuffle width via events_raw_schema and relies on
-    drain_to_parquet's ``finally`` to restore it — but an exception
-    BETWEEN the save and the drain (plan construction, source staging)
-    left the session resized AND the save slot populated, so the next
-    builder skipped its own save and restored the leaked width instead
-    of the true session default. Wrapping the whole builder makes the
-    restore unconditional on every exit path; after a successful drain
-    the slot is already empty and the extra restore is a no-op."""
-
-    @functools.wraps(fn)
-    def wrapper(spark, *args, **kwargs):
-        try:
-            return fn(spark, *args, **kwargs)
-        finally:
-            restore_shuffle_width(spark)
-
-    return wrapper
 
 
 def state_partitions_for(
@@ -110,11 +68,7 @@ def state_partitions_for(
     return n
 
 
-def events_raw_schema(
-    spark: SparkSession,
-    events_path: str,
-    state_partitions: int | None = None,
-) -> tuple[str, str]:
+def events_raw_schema(spark: SparkSession, events_path: str) -> tuple[str, str]:
     """Streaming reads need a declared schema, but the testdata's
     ``ts`` physical encoding varies by generation: INT64
     TIMESTAMP(NANOS) (readable only as ``bigint`` via nanosAsLong),
@@ -127,25 +81,6 @@ def events_raw_schema(
     discipline as tables.load."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Streaming state is partitioned by spark.sql.shuffle.partitions AT
-    # QUERY START and AQE does not coalesce it — under a vanilla
-    # session's default 200 that is 200 near-empty state-store tasks
-    # per micro-batch (measured 2-5x wall-clock on the stateful
-    # queries). This is the chokepoint every streaming reader passes
-    # through, so the state-partition knob lives here:
-    # ``state_partitions`` (size to state volume — see
-    # :func:`state_partitions_for`, the measured §13 rule worth 2.4x
-    # on the per-trigger floor at dashboard-sized state) or the core
-    # count as the prior default. The session default is SAVED here and
-    # restored by the drain (drain_to_parquet finally) so later batch
-    # queries in the same session are planned at the session width, not
-    # the stream's — AQE only coalesces down, never up.
-    from etl_mudah_spark.session import default_parallelism
-
-    _save_and_set_shuffle_width(
-        spark,
-        state_partitions if state_partitions else default_parallelism(),
-    )
     ts_dtype = dict(spark.read.parquet(events_path).dtypes)["ts"]
     return EVENTS_SCHEMA_TEMPLATE.format(ts=ts_dtype), ts_dtype
 
@@ -163,10 +98,72 @@ def normalize_ts(df: DataFrame, ts_dtype: str) -> DataFrame:
     return df
 
 
-def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
-    """Run a bounded stream to completion, staging micro-batch output to
-    parquet via ``foreachBatch``, and return a lazy batch read of the
-    staged files.
+def run_available(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    *,
+    state_partitions: int | None = None,
+) -> None:
+    """Start ``writer``, run the query until every input available now
+    is processed (Trigger.AvailableNow semantics), then stop it.
+
+    Every bounded stream in the engine runs through here, because this
+    is where the state width is chosen. Streaming state is partitioned
+    by spark.sql.shuffle.partitions AT QUERY START, and AQE does not
+    coalesce it: under a vanilla session's default 200 that is 200
+    near-empty state-store tasks per micro-batch (measured 2-5x
+    wall-clock on the stateful queries). So the width is set just
+    before ``start()``: ``state_partitions`` (size to state volume —
+    :func:`state_partitions_for`, the measured §13 rule worth 2.4x on
+    the per-trigger floor at dashboard-sized state) or the core count.
+    The session's prior width is restored on every exit path: AQE only
+    coalesces partitions DOWN, so a leaked narrow width would plan
+    every later batch shuffle in this session narrow.
+
+    The final StreamingQueryProgress lands in :data:`LAST_PROGRESS`;
+    its stateOperators[].numShufflePartitions is the state partition
+    count the store actually committed per trigger.
+    """
+    from etl_mudah_spark.session import default_parallelism
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(state_partitions or default_parallelism()),
+    )
+    try:
+        q = writer.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            LAST_PROGRESS.clear()
+            if q.lastProgress is not None:
+                LAST_PROGRESS.update(q.lastProgress)
+            q.stop()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def read_staged(
+    spark: SparkSession, path: str, schema: StructType | str
+) -> DataFrame:
+    """Lazy read of the parquet a stream staged at ``path``, or an empty
+    frame of ``schema`` when no micro-batch wrote any."""
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
+
+
+def drain_to_parquet(
+    stream_df: DataFrame,
+    spark: SparkSession,
+    mode: str,
+    *,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Run a bounded stream to completion (:func:`run_available`),
+    staging micro-batch output to parquet via ``foreachBatch``, and
+    return a lazy batch read of the staged files.
 
     This is the scale-safe hand-off from a finished stream to batch
     consumers: the driver only ever holds a path — output lands as
@@ -186,34 +183,16 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> Da
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode(write_mode).parquet(path)
 
-    q = stream_df.writeStream.outputMode(mode).foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        # surface the final StreamingQueryProgress for observability:
-        # stateOperators[].numShufflePartitions is the ACTUAL state
-        # partition count the store committed per trigger — the number
-        # the state_partitions knob controls, pinned in
-        # tests/test_pipeline_e2e.py at two sizes
-        LAST_PROGRESS.clear()
-        if q.lastProgress is not None:
-            LAST_PROGRESS.update(q.lastProgress)
-        q.stop()
-        restore_shuffle_width(spark)
-    if not os.path.exists(path):
-        # No micro-batch produced output: empty result, stream's schema.
-        return spark.createDataFrame([], stream_df.schema)
-    return spark.read.parquet(path)
-
-
-def _events_stream(
-    spark: SparkSession, sf_dir: str, state_partitions: int | None = None
-) -> DataFrame:
-    ddl, ts_dtype = events_raw_schema(
+    run_available(
         spark,
-        os.path.join(sf_dir, "events.parquet"),
+        stream_df.writeStream.outputMode(mode).foreachBatch(sink),
         state_partitions=state_partitions,
     )
+    return read_staged(spark, path, stream_df.schema)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ddl, ts_dtype = events_raw_schema(spark, os.path.join(sf_dir, "events.parquet"))
     raw = (
         spark.readStream.schema(ddl)
         .option("pathGlobFilter", "events.parquet")
@@ -222,7 +201,6 @@ def _events_stream(
     return normalize_ts(raw, ts_dtype)
 
 
-@_restores_shuffle_width
 def stream_hourly_event_counts(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -237,7 +215,7 @@ def stream_hourly_event_counts(
     (BASELINE.md §13).
     """
     agg = (
-        _events_stream(spark, sf_dir, state_partitions)
+        _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -246,25 +224,27 @@ def stream_hourly_event_counts(
         )
         .select(F.col("w.start").alias("hour_start"), "event_type", "cnt", "total_value")
     )
-    return drain_to_parquet(agg, spark, "complete")
+    return drain_to_parquet(
+        agg, spark, "complete", state_partitions=state_partitions
+    )
 
 
-@_restores_shuffle_width
 def stream_dedup_events(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
     """Streaming dedup on event_id within a watermark, counted per type.
     ``state_partitions``: see :func:`state_partitions_for` (§13)."""
     deduped = (
-        _events_stream(spark, sf_dir, state_partitions)
+        _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    result = drain_to_parquet(deduped, spark, "append")
+    result = drain_to_parquet(
+        deduped, spark, "append", state_partitions=state_partitions
+    )
     return result.groupBy("event_type").agg(F.count("*").alias("cnt"))
 
 
-@_restores_shuffle_width
 def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: purchases attributed to a prior
     view by the same user within 30 minutes.
@@ -310,7 +290,6 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_restores_shuffle_width
 def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join: the events stream enriched with the customer
     dimension (user_id = c_custkey), aggregated per nation.
@@ -337,7 +316,6 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_to_parquet(agg, spark, "complete")
 
 
-@_restores_shuffle_width
 def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming build of the mergeable-sketch table
     (operators/rollup.py shape): per-hour HLL sketches of user_id
@@ -358,7 +336,6 @@ def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_to_parquet(agg, spark, "complete")
 
 
-@_restores_shuffle_width
 def stream_cms_counters(
     spark: SparkSession,
     sf_dir: str,
@@ -428,26 +405,14 @@ def stream_cms_counters(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = normalize_ts(reader.parquet(sf_dir), ts_dtype)
-    q = (
-        src.writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .start()
+    run_available(
+        spark, src.writeStream.outputMode("append").foreachBatch(apply_batch)
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        restore_shuffle_width(spark)
     if latest["path"] is None:
         # empty stream: derive the group columns' REAL types from the
         # source schema (a hardcoded string type would break unions
         # against genuinely-typed counter tables downstream).
-        from pyspark.sql.types import (
-            IntegerType,
-            LongType,
-            StructField,
-            StructType,
-        )
+        from pyspark.sql.types import IntegerType, LongType, StructField
 
         fields = [src.schema[c] for c in group_cols] + [
             StructField("row", IntegerType()),
@@ -458,7 +423,6 @@ def stream_cms_counters(
     return spark.read.parquet(latest["path"])
 
 
-@_restores_shuffle_width
 def stream_value_drift_bins(
     spark: SparkSession,
     sf_dir: str,
@@ -527,7 +491,6 @@ def _stream_side_bin_counts(
     )
 
 
-@_restores_shuffle_width
 def stream_value_ks_binned(
     spark: SparkSession,
     sf_dir: str,
@@ -548,7 +511,6 @@ def stream_value_ks_binned(
     return ks_binned_from_counts(wide, n_bins)
 
 
-@_restores_shuffle_width
 def stream_value_quantile_sketch(
     spark: SparkSession,
     sf_dir: str,
@@ -583,10 +545,7 @@ def stream_value_quantile_sketch(
     )
 
 
-@_restores_shuffle_width
-def stream_sliding_5min_counts(
-    spark: SparkSession, sf_dir: str, state_partitions: int | None = None
-) -> DataFrame:
+def stream_sliding_5min_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 5-minute / 1-minute-hop window counts maintained by the
     stream: watermarked APPEND mode, so each window's count is emitted
     exactly once, when the watermark proves it complete — the
@@ -595,29 +554,15 @@ def stream_sliding_5min_counts(
 
     Append-mode windows only flush when event time PASSES them, and a
     single-file stream's watermark update takes effect one micro-batch
-    too late — so the source is staged with the sessionizers' late
-    sentinel files (streaming/stateful._stage_with_sentinels): two
-    far-future rows arrive in follow-up micro-batches, advance the
-    watermark past every real window, and land in windows 10+ days
-    away from the data, which the caller filters by a literal cutoff.
+    too late — so the source is the sessionizers' sentinel-staged
+    stream (streaming/stateful.sentinel_staged_events): two far-future
+    rows arrive in follow-up micro-batches, advance the watermark past
+    every real window, and land in windows 10+ days away from the
+    data, which the caller filters by a literal cutoff.
     """
-    import shutil
-    import tempfile
+    from etl_mudah_spark.streaming.stateful import sentinel_staged_events
 
-    from etl_mudah_spark.streaming.stateful import _stage_with_sentinels
-
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sliding_peak_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        raw = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        )
+    with sentinel_staged_events(spark, sf_dir, "sliding_peak_") as raw:
         agg = (
             raw.where(F.col("ts").isNotNull())
             .withWatermark("ts", "10 minutes")
@@ -630,9 +575,3 @@ def stream_sliding_5min_counts(
             )
         )
         return drain_to_parquet(agg, spark, "append")
-    finally:
-        # drain_to_parquet restores on success; this covers an
-        # exception between events_raw_schema and the drain (no-op when
-        # the drain already restored).
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)

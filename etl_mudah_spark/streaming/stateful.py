@@ -25,6 +25,7 @@ pandas work is O(rows log rows) for the in-batch sort.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -38,7 +39,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from etl_mudah_spark.streaming.pipeline import (
     drain_to_parquet,
     events_raw_schema,
-    restore_shuffle_width,
     normalize_ts,
 )
 
@@ -112,40 +112,54 @@ def _make_sessionizer(gap_us: int):
     return fn
 
 
-def _stage_with_sentinels(
-    spark: SparkSession, sf_dir: str, staging: str, ddl: str, ts_dtype: str
-) -> None:
-    """Copy events.parquet into ``staging`` and append two sentinel
-    files with strictly increasing mtimes (file source orders batches
-    by modification time under maxFilesPerTrigger=1). Sentinels are
-    written in the SAME ts encoding as the source file so one declared
-    stream schema covers all staged files."""
+@contextlib.contextmanager
+def sentinel_staged_events(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> Iterator[DataFrame]:
+    """Yield the events stream, ``ts`` normalized, read one file per
+    trigger from a staging dir holding a copy of events.parquet plus
+    two sentinel files with strictly increasing mtimes (file source
+    orders batches by modification time under maxFilesPerTrigger=1).
+    Sentinels are written in the SAME ts encoding as the source file so
+    one declared stream schema covers all staged files. The staging dir
+    is removed on exit, so drain the stream inside the ``with``."""
     import datetime
 
-    dst = os.path.join(staging, "000_events.parquet")
-    shutil.copyfile(os.path.join(sf_dir, "events.parquet"), dst)
-    max_ts = spark.read.schema(ddl).parquet(dst).agg(F.max("ts")).first()[0]
-    base_mtime = os.stat(dst).st_mtime
-    for i, offset_days in enumerate((10, 20), start=1):
-        if ts_dtype == "bigint":  # nanos-as-long
-            sentinel_ts = max_ts + offset_days * 24 * 3600 * 10**9
-        else:
-            sentinel_ts = max_ts + datetime.timedelta(days=offset_days)
-        sentinel = spark.createDataFrame(
-            [(-(10**9) - i, sentinel_ts, _SENTINEL_USER, "sentinel", 0.0, "{}")],
-            ddl,
+    ddl, ts_dtype = events_raw_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    staging = tempfile.mkdtemp(prefix=prefix)
+    try:
+        dst = os.path.join(staging, "000_events.parquet")
+        shutil.copyfile(os.path.join(sf_dir, "events.parquet"), dst)
+        max_ts = spark.read.schema(ddl).parquet(dst).agg(F.max("ts")).first()[0]
+        base_mtime = os.stat(dst).st_mtime
+        for i, offset_days in enumerate((10, 20), start=1):
+            if ts_dtype == "bigint":  # nanos-as-long
+                sentinel_ts = max_ts + offset_days * 24 * 3600 * 10**9
+            else:
+                sentinel_ts = max_ts + datetime.timedelta(days=offset_days)
+            sentinel = spark.createDataFrame(
+                [(-(10**9) - i, sentinel_ts, _SENTINEL_USER, "sentinel", 0.0, "{}")],
+                ddl,
+            )
+            path = os.path.join(staging, f"{i:03d}_sentinel")
+            sentinel.coalesce(1).write.parquet(path)
+            for f in os.listdir(path):
+                full = os.path.join(path, f)
+                if f.endswith(".parquet"):
+                    shutil.move(full, os.path.join(staging, f"{i:03d}_sentinel.parquet"))
+            shutil.rmtree(path, ignore_errors=True)
+            os.utime(
+                os.path.join(staging, f"{i:03d}_sentinel.parquet"),
+                (base_mtime + 10 * i, base_mtime + 10 * i),
+            )
+        yield normalize_ts(
+            spark.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staging),
+            ts_dtype,
         )
-        path = os.path.join(staging, f"{i:03d}_sentinel")
-        sentinel.coalesce(1).write.parquet(path)
-        for f in os.listdir(path):
-            full = os.path.join(path, f)
-            if f.endswith(".parquet"):
-                shutil.move(full, os.path.join(staging, f"{i:03d}_sentinel.parquet"))
-        shutil.rmtree(path, ignore_errors=True)
-        os.utime(
-            os.path.join(staging, f"{i:03d}_sentinel.parquet"),
-            (base_mtime + 10 * i, base_mtime + 10 * i),
-        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def stream_sessionize_native(
@@ -166,19 +180,8 @@ def stream_sessionize_native(
     directly, keeping the output identical to the stateful operator
     and the batch lag-window oracle.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sessionize_native_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        stream = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        ).withWatermark("ts", "0 seconds")
+    with sentinel_staged_events(spark, sf_dir, "sessionize_native_") as raw:
+        stream = raw.withWatermark("ts", "0 seconds")
         sessions = (
             stream.groupBy(
                 "user_id", F.session_window("ts", f"{gap_minutes} minutes")
@@ -192,9 +195,6 @@ def stream_sessionize_native(
         )
         out = drain_to_parquet(sessions, spark, "append")
         return out.where(F.col("user_id") != _SENTINEL_USER)
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def stream_sessionize_stateful(
@@ -203,19 +203,8 @@ def stream_sessionize_stateful(
     """Per-session rows (user_id, session_start, session_end, n_events)
     computed by a stateful streaming query; equals the batch lag-window
     sessionization on the same data."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sessionize_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        stream = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        ).withWatermark("ts", "0 seconds")
+    with sentinel_staged_events(spark, sf_dir, "sessionize_") as raw:
+        stream = raw.withWatermark("ts", "0 seconds")
         sessions = stream.groupBy("user_id").applyInPandasWithState(
             _make_sessionizer(gap_minutes * 60 * 1_000_000),
             OUT_SCHEMA,
@@ -228,9 +217,6 @@ def stream_sessionize_stateful(
         # the driver is the one thing this path must never do at scale.
         out = drain_to_parquet(sessions, spark, "append")
         return out.where(F.col("user_id") != _SENTINEL_USER)
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def stream_unconverted_views(
@@ -255,19 +241,7 @@ def stream_unconverted_views(
     from one side would stall it; sentinel rows join only each other
     (same user, same ts) and are dropped by the final user filter.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="unconverted_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        raw = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        )
+    with sentinel_staged_events(spark, sf_dir, "unconverted_") as raw:
         views = (
             raw.where(F.col("event_type").isin("view", "sentinel"))
             .select(
@@ -313,6 +287,3 @@ def stream_unconverted_views(
             .groupBy(F.col("v_user").alias("user_id"))
             .agg(F.count("*").alias("unconverted_views"))
         )
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)

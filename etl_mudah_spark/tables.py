@@ -82,9 +82,3 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     return ds.dataset(
         os.path.join(sf_dir, f"{name}.parquet"), format="parquet"
     ).count_rows()
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for the SQL surface."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -194,17 +194,14 @@ def test_state_partitions_knob_does_not_leak_into_session(spark):
     # the no-knob path resizes to core count and must restore too
     pl.stream_dedup_events(spark, SF_SMOKE).collect()
     assert spark.conf.get("spark.sql.shuffle.partitions") == default
-    assert not pl._PRIOR_SHUFFLE, "save slot must be empty after a drain"
 
 
 def test_builder_exception_restores_session_width(spark):
-    """ADVICE r13 (low): an exception BETWEEN a builder's shuffle-width
-    save (events_raw_schema) and its drain must still restore the
-    session default AND empty the save slot — otherwise the session
-    stays resized and the NEXT builder skips its own save, restoring
-    the leaked width instead of the true default. Exercised by pointing
-    a builder at a dir with no events file (fails after the save, at
-    stream construction)."""
+    """ADVICE r13 (low): a builder that fails before its stream starts
+    must leave the session default in place, and the NEXT builder must
+    still restore the true default rather than a leaked width.
+    Exercised by pointing a builder at a dir with no events file (fails
+    at stream construction)."""
     import pytest
 
     from etl_mudah_spark.streaming import pipeline as pl
@@ -216,7 +213,6 @@ def test_builder_exception_restores_session_width(spark):
             spark, "/nonexistent-sf-dir", state_partitions=2
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == default
-    assert not pl._PRIOR_SHUFFLE, "save slot must be empty after failure"
 
     # and the next builder still saves/restores the TRUE default
     pl.stream_dedup_events(spark, SF_SMOKE, state_partitions=3).collect()
@@ -225,7 +221,9 @@ def test_builder_exception_restores_session_width(spark):
 
 def test_ingest_state_partitions_restores_session_width(spark, tmp_path):
     """The ingest twin of the leak test: stream_ingest_listings at
-    state_partitions=1 must leave the session default untouched."""
+    state_partitions=1 must leave the session default untouched, both
+    when the run succeeds and when a foreachBatch raises mid-stream
+    (here: a row check on a column the batch does not have)."""
     import json
     import os
 
@@ -252,6 +250,61 @@ def test_ingest_state_partitions_restores_session_width(spark, tmp_path):
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == default
     assert os.path.exists(str(tmp_path / "table"))
+
+    with pytest.raises(Exception):
+        stream_ingest_listings(
+            spark,
+            drop_dir=str(drop),
+            table_path=str(tmp_path / "table_failing"),
+            checkpoint_dir=str(tmp_path / "ckpt_failing"),
+            row_checks=[not_null("no_such_column")],
+            quarantine_path=str(tmp_path / "quarantine"),
+            state_partitions=1,
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == default
+    assert not os.path.exists(str(tmp_path / "table_failing"))
+
+
+def test_stream_runner_is_the_only_drain():
+    """Every bounded stream goes through pipeline.run_available, the one
+    place that sets the state width and restores the session's: no
+    other function in the engine may drive a query with
+    processAllAvailable, and none in streaming/ may write
+    spark.sql.shuffle.partitions."""
+    import ast
+    import pathlib
+
+    def is_width_write(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and bool(node.args)
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == "spark.sql.shuffle.partitions"
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "etl_mudah_spark"
+    offenders = []
+
+    def visit(path, node, fn, streaming):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        drives = (
+            isinstance(node, ast.Attribute)
+            and node.attr == "processAllAvailable"
+        )
+        if fn != "run_available" and (
+            drives or (streaming and is_width_write(node))
+        ):
+            offenders.append(f"{path.name}:{node.lineno} in {fn}")
+        for child in ast.iter_child_nodes(node):
+            visit(path, child, fn, streaming)
+
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        visit(path, tree, "<module>", path.parent.name == "streaming")
+    assert not offenders, offenders
 
 
 def test_state_partitions_for_sizing_rule():
