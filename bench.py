@@ -210,7 +210,8 @@ def bench_merge_upsert(spark, sf_dir: str) -> float:
 
     The batch touches ONE partition of eight, so the timed region
     exercises the whole production shape: batch-partition semi-scan,
-    key-shuffle merge window, staged write, dynamic partition overwrite.
+    key-shuffle merge window, one staged write, rename publish of the
+    touched partition.
     Table setup/reset runs OUTSIDE the timer each rep (the merge mutates
     its target, so every rep needs a fresh copy).
     """

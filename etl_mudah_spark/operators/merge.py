@@ -11,8 +11,8 @@ Vanilla-Spark implementation (no Delta in this environment — with
 Delta this is a one-statement MERGE INTO, noted per SURVEY §2 S7):
 read target ∪ staged with a source marker, keep-one-per-key by
 (priority, order), preserve created_at from the target row while
-taking volatile columns from the staged row, rewrite atomically
-(write tmp → swap). Scale design:
+taking volatile columns from the staged row, write the merged frame
+ONCE to a sibling staging dir and publish it by renames. Scale design:
 
 - the union+window is ONE shuffle on the key — the same cost class as
   Delta's merge join;
@@ -20,13 +20,13 @@ taking volatile columns from the staged row, rewrite atomically
   (e.g. partitionBy(region_id)) and restrict the rewrite to partitions
   present in the batch — ``merge_upsert`` prunes target partitions via
   a semi-join when ``partition_col`` is given;
-- the replace goes through Spark's dynamic partition overwrite and the
-  Hadoop FileSystem API (HDFS/S3A-safe), not driver-local file moves.
+- the publish is a swap of whole directories by Hadoop FileSystem
+  renames (atomic per directory on HDFS and local disk, a copy on
+  S3A), not driver-local file moves and not a second Spark write:
+  see :func:`merge_upsert` for the swap and its crash matrix.
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -105,6 +105,28 @@ def merge_dataframes(
     return merged.drop("_src", "_rn", "_existing_created", "_batch_touched")
 
 
+def _move(fs, src, dst) -> None:
+    """Rename ``src`` to ``dst`` (which must not exist: Hadoop moves a
+    source INTO an existing directory), creating ``dst``'s parent."""
+    fs.mkdirs(dst.getParent())
+    if not fs.rename(src, dst):
+        raise OSError(f"rename {src.toString()} -> {dst.toString()} failed")
+
+
+def _units(fs, root, partition_col: str | None) -> list[str]:
+    """Publish units under ``root``: the root itself (``""``) for an
+    unpartitioned table, else each ``col=val`` directory in it."""
+    if not fs.exists(root):
+        return []
+    if not partition_col:
+        return [""]
+    return [
+        st.getPath().getName()
+        for st in fs.listStatus(root)
+        if st.isDirectory() and st.getPath().getName().startswith(f"{partition_col}=")
+    ]
+
+
 def merge_upsert(
     spark: SparkSession,
     staged: DataFrame,
@@ -120,19 +142,49 @@ def merge_upsert(
     """Merge ``staged`` into the parquet table at ``table_path``.
 
     With ``partition_col``: only partitions present in the batch are
-    read+rewritten (dynamic-overwrite shape) — untouched partitions'
-    files are never opened, which is what makes this viable at 100 TB.
+    read+rewritten — untouched partitions' files are never opened,
+    which is what makes this viable at 100 TB.
 
-    I/O goes through the Hadoop FileSystem API and Spark's dynamic
-    partition overwrite (``partitionOverwriteMode=dynamic``), never the
-    driver's local filesystem — the same code path works on HDFS/S3A.
-    The merged frame is staged to a scratch dir first because Spark
-    (correctly) refuses to overwrite a path its own plan is reading;
-    the final write replaces ONLY the partitions present in the batch
-    via the committer, not a hand-rolled directory swap.
+    Stage once, publish by rename. The merged frame is written exactly
+    once, to the fixed sibling ``<table>._merging`` (Spark refuses to
+    overwrite a path its own plan is reading, and a failed write there
+    never touches the live table). It is then published per UNIT — the
+    table dir, or each touched ``col=val`` dir when ``partition_col`` is
+    set — by Hadoop FileSystem renames: the live unit moves aside to
+    ``<table>._premerge``, the staged unit moves in, and the aside copy
+    is deleted once every unit is in. Partitioned and unpartitioned
+    tables share this one loop; the table stays a plain parquet dir.
+
+    Crash matrix. A recovery step runs at the top of every call: any
+    aside unit whose live twin is missing (the crash hit between its
+    two renames) is renamed back, then leftover ``._merging`` /
+    ``._premerge`` dirs are deleted (a staged unit is an unpublished
+    replay; an aside unit with a live twin is superseded). So a
+    complete copy of every unit exists under a known name at every
+    instant, and the replayed batch converges to the uninterrupted
+    result because the merge is idempotent. A reader that opens the
+    table between a unit's two renames sees that unit missing.
+
+    Single writer: the staging names are fixed, so at most one
+    ``merge_upsert`` may run per table at a time — the streaming
+    callers already allow only one query per checkpoint and table.
     """
-    fs, table_jpath = _hadoop_fs(spark, table_path)
-    exists = fs.exists(table_jpath)
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, live = _hadoop_fs(spark, table_path)
+    staging_path = table_path.rstrip("/") + "._merging"
+    staging = Path(staging_path)
+    aside = Path(table_path.rstrip("/") + "._premerge")
+
+    def unit(root, name):
+        return Path(root, name) if name else root
+
+    for name in _units(fs, aside, partition_col):
+        if not fs.exists(unit(live, name)):
+            _move(fs, unit(aside, name), unit(live, name))
+    fs.delete(staging, True)
+    fs.delete(aside, True)
+
+    exists = fs.exists(live)
     if exists and partition_col:
         parts = [r[0] for r in staged.select(partition_col).distinct().collect()]
         target = spark.read.parquet(table_path).where(
@@ -152,32 +204,14 @@ def merge_upsert(
         updated_col=updated_col,
         batch_ts=batch_ts,
     )
-
-    if not exists:
-        # Nothing read from table_path — write straight through.
-        writer = merged.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(table_path)
-        return
-
-    tmp = f"{table_path}__stage_{uuid.uuid4().hex[:8]}"
-    stage_writer = merged.write.mode("overwrite")
+    writer = merged.write.mode("overwrite")
     if partition_col:
-        stage_writer = stage_writer.partitionBy(partition_col)
-    stage_writer.parquet(tmp)
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(staging_path)
 
-    try:
-        final = spark.read.parquet(tmp)
-        writer = final.write.mode("overwrite")
-        if partition_col:
-            # Dynamic overwrite: only partitions present in `final`
-            # (exactly the batch's partitions) are replaced; untouched
-            # partitions keep their files.
-            writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
-                partition_col
-            )
-        writer.parquet(table_path)
-    finally:
-        tmp_fs, tmp_jpath = _hadoop_fs(spark, tmp)
-        tmp_fs.delete(tmp_jpath, True)
+    for name in _units(fs, staging, partition_col):
+        if fs.exists(unit(live, name)):
+            _move(fs, unit(live, name), unit(aside, name))
+        _move(fs, unit(staging, name), unit(live, name))
+    fs.delete(aside, True)
+    fs.delete(staging, True)

@@ -47,12 +47,10 @@ def _upsert_listings(
     not a single stream-start timestamp: each micro-batch gets its own
     updated_at, and a replayed batch reproduces the same stamp
     (idempotent under the at-least-once edge). An explicit ``batch_ts``
-    overrides."""
-    if flat.isEmpty():
+    overrides. Emptiness and the stamp come from one aggregate job."""
+    n, newest = flat.agg(F.count(F.lit(1)), F.max("listing_date")).first()
+    if not n:
         return
-    ts = batch_ts
-    if ts is None:
-        ts = flat.agg(F.max("listing_date")).first()[0]
     merge_upsert(
         spark,
         flat,
@@ -60,7 +58,7 @@ def _upsert_listings(
         key_cols=["listing_id"],
         order_cols=["listing_date", "listing_id"],
         partition_col=partition_col,
-        batch_ts=ts,
+        batch_ts=newest if batch_ts is None else batch_ts,
     )
 
 

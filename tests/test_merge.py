@@ -5,8 +5,10 @@ columns refresh; created_at survives; updated_at bumps only on touch."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_mudah_spark.operators.merge import merge_dataframes, merge_upsert
 
@@ -119,3 +121,111 @@ def test_merge_schema_evolution_new_and_missing_columns(spark):
     assert out[2]["price"] == 250.0 and out[2]["fuel"] == "diesel"
     # inserted row: target-only column NULL, new column present
     assert out[3]["region_id"] is None and out[3]["fuel"] == "petrol"
+
+
+# --- stage-once, rename-publish: failure and crash matrix -------------
+
+B1 = [(1, 10.0, T0, "r1", None, None), (2, 20.0, T0, "r2", None, None)]
+B2 = [(2, 25.0, T1, "r2", None, None), (3, 30.0, T1, "r2", None, None)]
+COLS = ["listing_id", "price", "listing_date", "region_id", "created_at", "updated_at"]
+
+# Spark jobs one merge_upsert into an existing unpartitioned table runs:
+# the target schema read, the merge window's shuffle map stage and the
+# one write.
+MERGE_JOBS = 3
+
+
+def _merge(spark, rows, path, ts, partition_col=None):
+    staged = _batch(spark, rows) if isinstance(rows, list) else rows
+    merge_upsert(spark, staged, path, ["listing_id"], ["listing_date", "listing_id"],
+                 partition_col=partition_col, batch_ts=ts)
+
+
+def _rows(spark, path):
+    return sorted(spark.read.parquet(path).select(*COLS).collect())
+
+
+def _uninterrupted(spark, tmp_path, partition_col=None):
+    ref = str(tmp_path / "reference")
+    _merge(spark, B1, ref, T1, partition_col)
+    _merge(spark, B2, ref, T2, partition_col)
+    return _rows(spark, ref)
+
+
+def _leftovers(path):
+    return [p for p in (path + "._merging", path + "._premerge") if os.path.exists(p)]
+
+
+@pytest.mark.parametrize("partition_col", [None, "region_id"])
+def test_merge_upsert_failed_write_leaves_table_intact(spark, tmp_path, partition_col):
+    """A staged write that fails (task error, full disk) never touches
+    the live table, and the next merge discards its partial output."""
+    path = str(tmp_path / "listings")
+    _merge(spark, B1, path, T1, partition_col)
+    before = _rows(spark, path)
+    bad = _batch(spark, B2).withColumn(
+        "price",
+        F.when(F.col("listing_id") == 3, F.raise_error(F.lit("disk full")))
+        .otherwise(F.col("price")),
+    )
+    with pytest.raises(Exception, match="disk full"):
+        _merge(spark, bad, path, T2, partition_col)
+    assert _rows(spark, path) == before
+    _merge(spark, B2, path, T2, partition_col)
+    assert not _leftovers(path)
+    assert _rows(spark, path) == _uninterrupted(spark, tmp_path, partition_col)
+
+
+def test_merge_upsert_restores_table_moved_aside(spark, tmp_path):
+    """Crash between the swap's two renames (unpartitioned): the table
+    dir is missing and its aside copy is complete — restored, and the
+    replayed batch gives the uninterrupted result."""
+    path = str(tmp_path / "listings")
+    _merge(spark, B1, path, T1)
+    os.rename(path, path + "._premerge")
+    _merge(spark, B2, path, T2)
+    assert _rows(spark, path) == _uninterrupted(spark, tmp_path)
+    assert not _leftovers(path)
+
+
+def test_merge_upsert_discards_leftover_staging(spark, tmp_path):
+    """Crash before the swap: a staged dir beside the live table is an
+    unpublished write — discarded, never published."""
+    path = str(tmp_path / "listings")
+    _merge(spark, B1, path, T1)
+    _batch(spark, [(9, 90.0, T0, "r9", T0, T0)]).write.parquet(path + "._merging")
+    _merge(spark, B2, path, T2)
+    assert _rows(spark, path) == _uninterrupted(spark, tmp_path)
+    assert not _leftovers(path)
+
+
+def test_merge_upsert_restores_partition_moved_aside(spark, tmp_path):
+    """Crash mid-swap on a partitioned table: one partition is aside
+    and missing from the table — restored, and the untouched partition
+    keeps its stamp."""
+    path = str(tmp_path / "listings")
+    _merge(spark, B1, path, T1, "region_id")
+    os.makedirs(path + "._premerge")
+    os.rename(f"{path}/region_id=r2", f"{path}._premerge/region_id=r2")
+    _merge(spark, B2, path, T2, "region_id")
+    assert _rows(spark, path) == _uninterrupted(spark, tmp_path, "region_id")
+    rows = {r.listing_id: r for r in spark.read.parquet(path).collect()}
+    assert rows[1].updated_at == T1  # partition r1 untouched
+    assert not _leftovers(path)
+
+
+def test_merge_upsert_writes_table_once(spark, tmp_path):
+    """One merge into an existing table writes the table once."""
+    path = str(tmp_path / "listings")
+    _merge(spark, B1, path, T1)
+    staged = _batch(spark, B2)
+    sc = spark.sparkContext
+    group = f"merge_once_{os.getpid()}"
+    sc.setJobGroup(group, "merge_upsert single write")
+    try:
+        _merge(spark, staged, path, T2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= MERGE_JOBS, sorted(jobs)
